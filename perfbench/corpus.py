@@ -32,13 +32,15 @@ class Size:
     files: int
     origins: int
     keys: int
+    # rows of the analytics tables, as a share of perfbench.tables.ROWS
+    table_scale: float = 1.0
     # drip steps measured per run, however short --seconds is
     min_steps: int = 3
 
 
 SIZES = {
-    "standard": Size(files=256, origins=8, keys=8192),
-    "tiny": Size(files=48, origins=4, keys=64, min_steps=2),
+    "standard": Size(files=256, origins=64, keys=8192),
+    "tiny": Size(files=48, origins=4, keys=64, table_scale=0.1, min_steps=2),
 }
 
 
@@ -71,6 +73,8 @@ class Corpus:
         self.versions = {o: 0 for o in self.origins}
         # live pathnames per origin, in insertion order
         self.live: dict[str, list[str]] = {o: [] for o in self.origins}
+        # number of the next new file's pathname, across origins
+        self.next_file = size.files
 
     def draw_tag(self, rnd: random.Random | None = None) -> str:
         return tag_name(self.zipf.draw(rnd or self.rnd))
@@ -105,20 +109,30 @@ class Corpus:
         return rows
 
     def drip_rows(self) -> list[dict]:
-        """One drip step: re-tagged puts plus one delete, spread over
-        DRIP_ORIGINS origins, each origin at a fresh version."""
-        candidates = [o for o in self.origins if len(self.live[o]) >= 2]
+        """One drip step: DRIP_CHANGES changes spread over DRIP_ORIGINS
+        origins, each origin at a fresh version. The first live file of
+        the step is deleted and the others are re-tagged; an origin with
+        too few live files gets new files instead, so every step has the
+        same shape however many steps ran before it."""
+        candidates = [o for o in self.origins if self.live[o]]
         origins = self.rnd.sample(candidates, DRIP_ORIGINS)
         per_origin = DRIP_CHANGES // DRIP_ORIGINS
         rows = []
         for j, origin in enumerate(origins):
             self.versions[origin] += 1
             version = self.versions[origin]
-            k = min(per_origin, len(self.live[origin]))
-            for m, pathname in enumerate(self.rnd.sample(self.live[origin], k)):
+            live = self.live[origin]
+            picks = self.rnd.sample(live, min(per_origin, len(live)))
+            for m in range(per_origin):
+                if m < len(picks):
+                    pathname = picks[m]
+                else:
+                    pathname = f"/posts/{self.next_file:05d}.json"
+                    self.next_file += 1
+                    live.append(pathname)
                 row = {"origin": origin, "pathname": pathname, "version": version}
                 if j == 0 and m == 0:
-                    self.live[origin].remove(pathname)
+                    live.remove(pathname)
                     row.update(type="del", content=None)
                 else:
                     tags, n, content = self._record()

@@ -32,7 +32,6 @@ ROOT = os.path.dirname(HERE)
 PACKAGE = "dat_archive_map_reduce_spark"
 # a run must end within 180 s; past this the watchdog tears it down
 WATCHDOG_S = 175.0
-ANALYTICS_SCALE = {"standard": 1.0, "tiny": 0.1}
 
 
 def parse_args(argv):
@@ -172,13 +171,11 @@ def main(argv=None) -> int:
             seconds=args.seconds,
             trace=bool(args.trace),
             t_start=t_start,
+            session_s=session_s,
         )
         run = workloads.WORKLOADS[args.workload]
         with probes.RssSampler(ctx.jvm.pid) as rss:
-            if args.workload == "analytics":
-                run(ctx, ANALYTICS_SCALE[args.size])
-            else:
-                run(ctx)
+            run(ctx)
         rep = ctx.report
         if args.trace:
             rep.layer["session.start_s"] = session_s

@@ -1,12 +1,13 @@
 """Run one workload on several seeds and report each metric's spread.
 
-    python3 perfbench/spread.py --workload drip --runs 10 --first-seed 1
+    python3 perfbench/spread.py --workload drip
 
-Runs ``perfbench/run.py`` once per seed, one run at a time, reading the
+Runs ``perfbench/run.py`` once for each of the seeds 1 to 10, one run at
+a time, reading the
 command and ``run_seconds`` from BENCHMARK.json. For every metric it
 prints the median, the quartiles (``statistics.quantiles(n=4)``) and the
 spread: the inter-quartile distance as a share of the median, next to the
-metric's bound.
+metric's bound, and the attempted and failed op counts over all runs.
 """
 
 from __future__ import annotations
@@ -20,21 +21,19 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SEEDS = range(1, 11)
 
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
-    p.add_argument("--runs", type=int, default=10)
-    p.add_argument("--first-seed", type=int, default=1)
-    p.add_argument("--out", help="append each run's result line to this file")
     args = p.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     bounds = {m["name"]: m.get("bound") for m in bench["end_to_end"] + bench["per_layer"]}
     values: dict[str, list[float]] = {}
-    failed = 0
-    for seed in range(args.first_seed, args.first_seed + args.runs):
+    attempted = failed = 0
+    for seed in SEEDS:
         cmd = bench["command"] + [
             "--workload", args.workload, "--seed", str(seed),
             "--seconds", str(bench["run_seconds"]), "--trace", "0",
@@ -47,15 +46,13 @@ def main(argv=None) -> int:
             print(f"seed {seed}: exit {proc.returncode}\n{proc.stderr[-2000:]}", file=sys.stderr)
             return 1
         result = json.loads(lines[-1])
+        attempted += result["attempted"]
         failed += result["failed"]
-        if args.out:
-            with open(args.out, "a") as f:
-                f.write(json.dumps({"workload": args.workload, "seed": seed, "wall_s": wall, **result}) + "\n")
         brief = " ".join(f"{k}={v['value']:.4g}" for k, v in result["metrics"].items())
         print(f"seed {seed} wall={wall:.1f}s correct={result['correct']} {brief}", flush=True)
         for name, m in result["metrics"].items():
             values.setdefault(name, []).append(m["value"])
-    print(f"\n{args.workload}: {args.runs} runs, {failed} failed ops")
+    print(f"\n{args.workload}: {len(SEEDS)} runs, {attempted} attempted ops, {failed} failed")
     for name, xs in values.items():
         med = statistics.median(xs)
         q1, _q2, q3 = statistics.quantiles(xs, n=4)

@@ -59,12 +59,15 @@ from dat_archive_map_reduce_spark.plans.catalog import (
     BucketedEntriesTable,
     BucketedMetaTable,
     VersionedTable,
+    arrow_schema,
+    crc_bucket,
     empty_df,
 )
 from dat_archive_map_reduce_spark.plans.view_def import ViewDefinition, validate_view_def
 from dat_archive_map_reduce_spark.sources.files import (
     FILES_SCHEMA,
     changelog_from_rows,
+    changelog_rows,
     glob_filter,
     latest_wins,
 )
@@ -85,6 +88,19 @@ EVENTS = (
 
 def _origin_shard(origin: str) -> str:
     return hashlib.sha1(origin.encode()).hexdigest()[:16]
+
+
+def _merge_rows(kept, rows: "list[tuple]", sort_cols: "list[str]"):
+    """A bucket's post-merge contents for the driver-local commit:
+    ``kept`` (a pyarrow Table) plus row tuples in its column order,
+    sorted on ``sort_cols`` like the Spark writers sort within a
+    bucket."""
+    import pyarrow as pa
+
+    names = kept.schema.names
+    cols = list(zip(*rows)) if rows else [[] for _ in names]
+    add = pa.table({n: list(c) for n, c in zip(names, cols)}, schema=kept.schema)
+    return pa.concat_tables([kept, add]).sort_by([(c, "ascending") for c in sort_cols])
 
 
 class MapReduce:
@@ -617,8 +633,11 @@ class MapReduce:
     # -- changelog ingestion ----------------------------------------
     def append_changes(self, rows: list[dict]) -> None:
         """Append put/del records to the engine's changelog (the analog
-        of new entries appearing in a Dat archive's history)."""
-        self.changelog.append(changelog_from_rows(self.spark, rows))
+        of new entries appearing in a Dat archive's history). The rows
+        are already on the driver, so they are written there with
+        pyarrow (AppendOnlyLog.append_rows): a Spark write job for a
+        drip step's 8 dicts took ~0.8 s (4-core host)."""
+        self.changelog.append_rows(changelog_rows(rows))
 
     def current_version(self, origin: str) -> int:
         row = (
@@ -1429,6 +1448,297 @@ class MapReduce:
             "left_semi",
         ).select("key", "key_json", "value")
 
+    # -- driver-local watch commit ------------------------------------
+    # A watch micro-batch of at most _LOCAL_BATCH_ROWS changelog rows
+    # and _LOCAL_BATCH_BYTES of content is collected and committed on
+    # the driver (streaming/watch.py) for every store whose views are
+    # all eligible (_local_store_eligible). The Spark regime costs
+    # ~6 s and ~40 jobs per batch whatever its size; the driver
+    # regime's cost grows ~80 us per row. Measured on 4 cores (README,
+    # watch section): 2 origins, 16,384 rows: 1.8 s vs 8.2 s; 65,536
+    # rows: 6.9 s vs 14.3 s; 131,072 rows: 12.0 s vs 14.7 s — the
+    # costs cross near 150k rows. BOUND sits at 16,384, where the
+    # driver regime is 4.5x cheaper and the bounded collect (BOUND
+    # rows x _LOCAL_INLINE_BYTES of inline content) stays under
+    # ~64 MB of driver memory. Larger batches take the Spark regime,
+    # the only one that can run a batch too large to collect.
+    _LOCAL_BATCH_ROWS = 16384
+    _LOCAL_BATCH_BYTES = 32 << 20
+    _LOCAL_INLINE_BYTES = 4 << 10
+    _INT_TEXT = _re.compile(r"-?[0-9]+")  # a stored integer value (fullmatch)
+
+    def _local_store_eligible(
+        self, vdefs: "list[ViewDefinition]", origins: "Sequence[str] | None"
+    ) -> bool:
+        """May this store's batch commit on the driver
+        (_prepare_store_batch_local)? Every reducing member must take
+        the exact count/integer-sum delta with a synced sidecar, every
+        reduced table must be absent or bucketed, every touched entries
+        shard absent or bucketed at the engine bucket count, and the
+        key types must have a pyarrow twin. Anything else — Python,
+        min/max or collect folds, an unsynced sidecar, a flat legacy
+        snapshot, a rebucketed shard — takes the Spark path.
+        ``origins=None`` skips the shard check (the views-only part).
+        Driver-side manifest reads only."""
+        try:
+            arrow_schema(entries_schema(vdefs[0].key_types()))
+        except TypeError:
+            return False
+        for v in vdefs:
+            if v.reduce is None:
+                continue
+            fold = v.exact_delta_fold()
+            if fold is None or not self._sidecar_synced(v):
+                return False
+            tables = [self._reduced_table(v.name)]
+            if fold in ("sum", "avg"):
+                tables.append(self._reduced_cnt_table(v.name))
+            if any(t.exists() and not t.current_is_bucketed() for t in tables):
+                return False
+        return origins is None or all(
+            self._onejob_eligible(vdefs[0].name, o) for o in origins
+        )
+
+    def _double_text(self, x: float) -> str:
+        """The text Spark's cast(double as string) gives ``x`` — the
+        reduced value format of the sum/avg folds. Integer values up
+        to 2^53 (every exact integer sum) format in Python: Java's
+        Double.toString is plain decimal with '.0' in [1e-3, 1e7) and
+        'd.dddE<n>' outside it, over the digits of the integer. Other
+        values ask the JVM's Double.toString, which the cast calls."""
+        if x.is_integer() and abs(x) <= 1 << 53:
+            i = int(x)
+            if abs(i) < 10_000_000:
+                return f"{i}.0"
+            ds = str(abs(i))
+            frac = ds[1:].rstrip("0") or "0"
+            return f"{'-' if i < 0 else ''}{ds[0]}.{frac}E{len(ds) - 1}"
+        return self.spark.sparkContext._jvm.java.lang.Double.toString(float(x))
+
+    def _prepare_store_batch_local(
+        self,
+        vdefs: "list[ViewDefinition]",
+        upd: "list[dict]",
+        batch_token,
+    ) -> "Callable[[], None] | None":
+        """Driver-local twin of _apply_store_batch on the exact-delta
+        path, for a collected micro-batch ``upd`` (latest-wins,
+        glob-filtered changelog rows of this store; caller checked
+        _local_store_eligible). No Spark job: the map runs through the
+        same map_file_entries the mapInPandas adapter uses, the
+        touched entries buckets are read and rewritten with pyarrow
+        (read_buckets_local / write_merged_local), and the count and
+        integer-sum deltas of every reducing member are applied to its
+        reduced table and (cnt, ssum) sidecar in Python.
+
+        Everything is computed before anything is written; returns the
+        commit closure, or None when some value falls outside what the
+        driver reproduces bit for bit (a stored value that is not an
+        integer text, a sum past BIGINT) — nothing is written then,
+        and the caller runs the Spark path. The commit keeps the Spark
+        path's contracts: reduced (then sidecar) flips carry the batch
+        token and happen before any entries pointer flips, a replayed
+        token skips its table, and the pointer table is upserted once
+        after the shards flipped."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from dat_archive_map_reduce_spark.operators.map_reduce import (
+            map_file_entries,
+        )
+
+        if not upd:
+            return lambda: None
+        lead = vdefs[0]
+        for v in vdefs:
+            if v.value_type in ("long", "int", "bigint"):
+                lead = v
+                break
+        key_types = lead.key_types()
+        integer_values = lead.value_type in ("long", "int", "bigint")
+        new: "list[tuple]" = []
+        for r in upd:
+            if r["type"] == "put":
+                new.extend(
+                    map_file_entries(
+                        lead.map, key_types, integer_values,
+                        r["origin"], r["pathname"], r["url"], r["content"],
+                    )
+                )
+
+        # entries: per origin shard, the touched buckets' survivors plus
+        # the new rows; the retracted rows feed the deltas
+        urls = pa.array(sorted({r["url"] for r in upd}), pa.string())
+        # every touched shard is at the engine bucket count (eligibility)
+        n = self.entries_buckets
+        new_by_ob: "dict[tuple[str, int], list[tuple]]" = {}
+        touched: "dict[str, set[int]]" = {}
+        tables = {}
+        for r in upd:
+            o = r["origin"]
+            if o not in tables:
+                tables[o] = self._entries_table(lead.name, o)
+            touched.setdefault(o, set()).add(crc_bucket(r["url"], n))
+        for e in new:
+            new_by_ob.setdefault((e[5], crc_bucket(e[3], n)), []).append(e)
+        entry_writes: "dict[str, dict[int, pa.Table]]" = {}
+        retracted: "list[dict]" = []
+        for o in sorted(touched):
+            out: "dict[int, pa.Table]" = {}
+            for b, old in tables[o].read_buckets_local(sorted(touched[o])).items():
+                gone = pc.is_in(old["file_url"], value_set=urls)
+                retracted.extend(
+                    old.filter(gone).select(["key", "key_json", "value"]).to_pylist()
+                )
+                out[b] = _merge_rows(
+                    old.filter(pc.invert(gone)),
+                    new_by_ob.get((o, b), []),
+                    ["key_json", "file_url", "emit_seq"],
+                )
+            entry_writes[o] = out
+
+        # per-key deltas: key_json -> [key struct, entry count delta,
+        # integer value sum delta] (sums only when a member folds them)
+        need_sum = any(v.exact_delta_fold() in ("sum", "avg") for v in vdefs)
+        kfields = [f"k{i}" for i in range(len(key_types))]
+        delta: "dict[str, list]" = {}
+        for comps, kj, value, *_rest in new:
+            d = delta.setdefault(kj, [dict(zip(kfields, comps)), 0, 0])
+            d[1] += 1
+            if need_sum:
+                d[2] += int(value)
+        for r in retracted:
+            d = delta.setdefault(r["key_json"], [r["key"], 0, 0])
+            d[1] -= 1
+            if need_sum:
+                if r["value"] is None or not self._INT_TEXT.fullmatch(r["value"]):
+                    return None
+                d[2] -= int(r["value"])
+
+        commits: "list[Callable[[], None]]" = []
+        for v in vdefs:
+            fold = v.exact_delta_fold()
+            if fold is None:
+                continue
+            plan = self._local_reduced_commits(v, fold, delta, batch_token)
+            if plan is None:
+                return None
+            commits.extend(plan)
+
+        def _commit() -> None:
+            for c in commits:
+                c()
+            flips = [
+                tables[o].write_merged_local(bs, defer_commit=True)
+                for o, bs in entry_writes.items()
+            ]
+            for flip in flips:
+                flip()
+            self._record_entry_ptrs(lead.name, sorted(entry_writes))
+
+        return _commit
+
+    def _local_reduced_commits(
+        self, vdef: ViewDefinition, fold: str, delta: "dict[str, list]", batch_token
+    ) -> "list[Callable[[], None]] | None":
+        """The reduced (and sidecar) half of _prepare_store_batch_local
+        for one view: the same arithmetic as _reaggregate_exact_delta,
+        on the touched key_json buckets read with pyarrow. Returns the
+        table commits in flip order (reduced, then sidecar; a table
+        that already holds ``batch_token`` is skipped), or None when a
+        value falls outside the driver's exact domain."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        red = self._reduced_table(vdef.name)
+        cnt = self._reduced_cnt_table(vdef.name) if fold in ("sum", "avg") else None
+        red_done = self._token_applied(red, batch_token)
+        cnt_done = cnt is None or self._token_applied(cnt, batch_token)
+        if red_done and cnt_done:
+            return []  # replay of a fully-applied batch
+        d = {
+            k: x
+            for k, x in delta.items()
+            if x[1] != 0 or (fold != "count" and x[2] != 0)
+        }
+        if not d and any(t.exists() for t in (red, cnt) if t is not None):
+            return []  # empty delta: nothing to commit
+        keys = pa.array(sorted(d), pa.string())
+        meta = {"batch_token": batch_token}
+
+        def _split(t):
+            """{bucket: (its untouched rows, {key_json: touched row},
+            the bucket's delta keys)} over the delta's buckets of t."""
+            n, ks = t.n_buckets, {}
+            for k in d:
+                ks.setdefault(crc_bucket(k, n), []).append(k)
+            out = {}
+            for b, old in t.read_buckets_local(sorted(ks)).items():
+                hit = pc.is_in(old["key_json"], value_set=keys)
+                out[b] = (
+                    old.filter(pc.invert(hit)),
+                    {r["key_json"]: r for r in old.filter(hit).to_pylist()},
+                    ks[b],
+                )
+            return out
+
+        if cnt is None:
+            out = {}
+            for b, (kept, olds, ks) in _split(red).items():
+                rows = []
+                for k in ks:
+                    o = olds.get(k)
+                    if o is None:
+                        key, c = d[k][0], d[k][1]
+                    elif o["value"] is not None and self._INT_TEXT.fullmatch(o["value"]):
+                        key, c = o["key"], int(o["value"]) + d[k][1]
+                    else:
+                        return None
+                    if c > 0:  # delete-on-empty
+                        rows.append((key, k, str(c)))
+                out[b] = _merge_rows(kept, rows, ["key_json"])
+            return [lambda: red.write_merged_local(out, meta)]
+
+        # sum/avg: post-batch (cnt, ssum) of every delta key from the
+        # sidecar's own rows plus the delta; the reduced value derives
+        # from it — the Spark path's state frame, row for row
+        cnt_split = _split(cnt)
+        olds_all = {}
+        for _kept, olds, _ks in cnt_split.values():
+            olds_all.update(olds)
+        state: "dict[str, tuple]" = {}
+        lim = 1 << 63
+        for k, (key, dc, dsl) in d.items():
+            o = olds_all.get(k)
+            c = (o["cnt"] if o else 0) + dc
+            s = (o["ssum"] if o else 0) + dsl
+            if not (-lim <= s < lim and -lim <= dsl < lim):
+                return None
+            if c > 0:  # delete-on-empty: the count, never the sum
+                state[k] = (key, c, s)
+        cnt_out = {
+            b: _merge_rows(
+                kept, [(k, state[k][1], state[k][2]) for k in ks if k in state],
+                ["key_json"],
+            )
+            for b, (kept, _olds, ks) in cnt_split.items()
+        }
+        red_out = {}
+        for b, (kept, _olds, ks) in _split(red).items():
+            rows = []
+            for k in ks:
+                if k in state:
+                    key, c, s = state[k]
+                    x = float(s) if fold == "sum" else float(s) / c
+                    rows.append((key, k, self._double_text(x)))
+            red_out[b] = _merge_rows(kept, rows, ["key_json"])
+        commits = []
+        if not red_done:
+            commits.append(lambda: red.write_merged_local(red_out, meta))
+        if not cnt_done:
+            commits.append(lambda: cnt.write_merged_local(cnt_out, meta))
+        return commits
+
     @staticmethod
     def _token_applied(table: VersionedTable, batch_token) -> bool:
         """Has this table already committed the given batch token?
@@ -1581,13 +1891,11 @@ class MapReduce:
                     .agg(F.sum("dc").cast("long").alias("dc"))
                     .filter(F.col("dc") != 0)
                 )
-        # NOTE (r15): a driver-side micro-batch fast path here (the
-        # _minmax_delta_driver pattern) was implemented, equivalence-
-        # tested and MEASURED AT PARITY (2.35 vs 2.30 s/drip-batch,
-        # 15 jobs either way), then reverted: unlike the ~10-join
-        # minmax plan it replaced there, this path is already one
-        # probe + one write (r13 job-budget work), and the driver
-        # variant's own collects cost the same three small job waves.
+        # Drip-sized watch batches never get here: they commit on the
+        # driver with no Spark job at all (_prepare_store_batch_local,
+        # the same arithmetic over pyarrow reads). A driver variant of
+        # THIS function alone measured at parity, because its own
+        # collects cost the job waves it saved.
         delta = delta.cache()
         try:
             delta_keys = delta.select("key_json")

@@ -82,6 +82,62 @@ def _coerce_component(v: Any, dt: T.DataType) -> Any:
     return v
 
 
+def map_file_entries(
+    map_fn: Callable[[str, dict, Callable[[Any, Any], None]], None],
+    key_types: Sequence[T.DataType],
+    integer_values: bool,
+    origin: str,
+    pathname: str,
+    url: str,
+    content: str,
+) -> "list[tuple]":
+    """Run the user's map over ONE file and return its entry rows as
+    tuples in ``entries_schema`` order: (key components, key_json,
+    value JSON, file_url, emit_seq, origin).
+
+    The one implementation of the map semantics: the ``mapInPandas``
+    adapter (run_map) and the watch path's driver-side commit both
+    call it, so key normalisation, key_json, the value encoding and
+    the declared-integer check cannot diverge between them."""
+    n_key = len(key_types)
+    emits: list[tuple[Any, Any]] = []
+    map_fn(
+        content,
+        {"url": url, "origin": origin, "pathname": pathname},
+        lambda key, value: emits.append((key, value)),
+    )
+    out = []
+    for seq, (key, value) in enumerate(emits):
+        comps = normalize_key(key)
+        if len(comps) != n_key:
+            raise ValueError(
+                f"map emitted key with {len(comps)} components, "
+                f"view declares {n_key}: {key!r}"
+            )
+        comps = tuple(
+            _coerce_component(c, key_types[i]) for i, c in enumerate(comps)
+        )
+        if integer_values and (isinstance(value, bool) or not isinstance(value, int)):
+            raise SchemaError(
+                f"map emitted non-integer value {value!r} at "
+                f"key {key!r} ({url}) but the view declares "
+                "value_type integer — the exact-delta fold "
+                "would diverge from the refold; emit ints, "
+                "or drop the value_type declaration"
+            )
+        out.append(
+            (
+                comps,
+                _key_json(comps if n_key > 1 else comps[0]),
+                json.dumps(value, separators=(",", ":")),
+                url,
+                seq,
+                origin,
+            )
+        )
+    return out
+
+
 def run_map(
     files: DataFrame,
     map_fn: Callable[[str, dict, Callable[[Any, Any], None]], None],
@@ -92,7 +148,8 @@ def run_map(
 
     ``files`` must have columns (origin, pathname, url, content); only
     'put' rows should be passed in. Uses mapInPandas so each Python
-    worker processes an Arrow batch of whole files at a time.
+    worker processes an Arrow batch of whole files at a time; each
+    file goes through map_file_entries.
 
     ``value_type`` declared-integer ('long'/'int'/'bigint') ENFORCES
     integer emits (r13 ADVICE): the declaration licenses the exact
@@ -105,58 +162,25 @@ def run_map(
     the map stage (worker-side, zero extra jobs), failing the batch
     loudly before anything commits.
     """
-    n_key = len(key_types)
     out_schema = entries_schema(key_types)
     key_types_local = list(key_types)
     integer_values = value_type in ("long", "int", "bigint")
+    names = [f.name for f in out_schema.fields]
 
     def _map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {
-                "key": [],
-                "key_json": [],
-                "value": [],
-                "file_url": [],
-                "emit_seq": [],
-                "origin": [],
-            }
+            rows: list[tuple] = []
             for origin, pathname, url, content in zip(
                 pdf["origin"], pdf["pathname"], pdf["url"], pdf["content"]
             ):
-                meta = {"url": url, "origin": origin, "pathname": pathname}
-                emits: list[tuple[Any, Any]] = []
-
-                def emit(key: Any, value: Any, _emits=emits) -> None:
-                    _emits.append((key, value))
-
-                map_fn(content, meta, emit)
-                for seq, (key, value) in enumerate(emits):
-                    comps = normalize_key(key)
-                    if len(comps) != n_key:
-                        raise ValueError(
-                            f"map emitted key with {len(comps)} components, "
-                            f"view declares {n_key}: {key!r}"
-                        )
-                    comps = tuple(
-                        _coerce_component(c, key_types_local[i]) for i, c in enumerate(comps)
+                rows.extend(
+                    map_file_entries(
+                        map_fn, key_types_local, integer_values,
+                        origin, pathname, url, content,
                     )
-                    if integer_values and (
-                        isinstance(value, bool) or not isinstance(value, int)
-                    ):
-                        raise SchemaError(
-                            f"map emitted non-integer value {value!r} at "
-                            f"key {key!r} ({url}) but the view declares "
-                            "value_type integer — the exact-delta fold "
-                            "would diverge from the refold; emit ints, "
-                            "or drop the value_type declaration"
-                        )
-                    out["key"].append(comps)
-                    out["key_json"].append(_key_json(comps if n_key > 1 else comps[0]))
-                    out["value"].append(json.dumps(value, separators=(",", ":")))
-                    out["file_url"].append(url)
-                    out["emit_seq"].append(seq)
-                    out["origin"].append(origin)
-            yield pd.DataFrame(out)
+                )
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame({n: list(c) for n, c in zip(names, cols)})
 
     cols = ["origin", "pathname", "url", "content"]
     return files.select(*cols).mapInPandas(_map_batches, schema=out_schema)

@@ -38,6 +38,58 @@ def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
+def crc_bucket(value: str, n: int) -> int:
+    """Bucket id of ``value`` among ``n``: zlib crc32 of its UTF-8
+    bytes, the same bytes Spark's F.crc32 hashes."""
+    import zlib
+
+    return zlib.crc32(value.encode("utf-8")) % n
+
+
+def arrow_type(dt: T.DataType):
+    """The pyarrow type a Spark type reads back as from parquet (the
+    driver-local writers' column types). Raises TypeError for types
+    the driver-local IO does not carry."""
+    import pyarrow as pa
+
+    if isinstance(dt, T.StructType):
+        return pa.struct([(f.name, arrow_type(f.dataType)) for f in dt.fields])
+    simple = {
+        "string": pa.string(),
+        "bigint": pa.int64(),
+        "int": pa.int32(),
+        "boolean": pa.bool_(),
+        "double": pa.float64(),
+    }.get(dt.simpleString())
+    if simple is None:
+        raise TypeError(f"no driver-local parquet type for {dt.simpleString()}")
+    return simple
+
+
+def arrow_schema(schema: T.StructType):
+    """pyarrow schema of a Spark schema. Every field is nullable: reads
+    pin the Spark schema anyway, and nullable fields let a table read
+    back from Spark-written files cast to it whatever their flags."""
+    import pyarrow as pa
+
+    return pa.schema([(f.name, arrow_type(f.dataType)) for f in schema.fields])
+
+
+def write_parquet_atomic(table, path: str) -> None:
+    """Write a pyarrow table to ``path`` under a hidden ``.``-prefixed
+    name, then rename it into place: Spark's file listings (the watch
+    stream, every read) skip dot-files, so no reader ever lists a
+    partial file."""
+    import pyarrow.parquet as pq
+
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, "." + name)
+    # no ARROW:schema footer blob: every reader pins its own schema,
+    # and the blob made each small bucket file ~30% larger
+    pq.write_table(table, tmp, store_schema=False)
+    os.rename(tmp, path)
+
+
 class VersionedTable:
     def __init__(self, spark: SparkSession, root: str, schema: T.StructType):
         self.spark = spark
@@ -309,18 +361,7 @@ class VersionedTable:
     # so crash-safety, time travel, and vacuum are identical.
 
     def _pa_schema(self):
-        import pyarrow as pa
-
-        _MAP = {
-            "string": pa.string(),
-            "bigint": pa.int64(),
-            "int": pa.int32(),
-            "boolean": pa.bool_(),
-            "double": pa.float64(),
-        }
-        return pa.schema(
-            [(f.name, _MAP[f.dataType.simpleString()]) for f in self.schema.fields]
-        )
+        return arrow_schema(self.schema)
 
     def read_rows(self) -> "list[tuple]":
         """Driver-local read of the current snapshot as a list of row
@@ -336,7 +377,7 @@ class VersionedTable:
         names = [f.name for f in self.schema.fields]
         out: list[tuple] = []
         for path in sorted(_glob.glob(f"{self._snapshot_dir(v)}/*.parquet")):
-            t = pq.read_table(path, columns=names)
+            t = pq.ParquetFile(path).read(columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             out.extend(zip(*cols) if cols and t.num_rows else [])
         return out
@@ -491,9 +532,7 @@ class BucketedEntriesTable(VersionedTable):
     def bucket_of(self, value: str) -> int:
         """Driver-side bucket id of one value — zlib crc32 == Spark
         F.crc32 on utf-8 bytes (pinned by test)."""
-        import zlib
-
-        return zlib.crc32(value.encode("utf-8")) % self.n_buckets
+        return crc_bucket(value, self.n_buckets)
 
     def _bucket_dir(self, v: int, b: int) -> str:
         return f"{self._snapshot_dir(v)}/_b={b}"
@@ -727,6 +766,13 @@ class BucketedEntriesTable(VersionedTable):
         if sort_cols:
             w = w.sortWithinPartitions("_b", *sort_cols)
         w.write.mode("overwrite").partitionBy("_b").parquet(dest)
+        return self._merged_commit(cur, v, n, touched_ids, meta, defer_commit)
+
+    def _merged_commit(self, cur, v, n, touched_ids, meta, defer_commit):
+        """The driver-side commit of a merged snapshot ``v`` whose
+        touched buckets are already written: hardlink every untouched
+        bucket of ``cur``, write the layout meta, flip the pointer —
+        now, or in the returned closure when ``defer_commit``."""
         # pin the layout decision at WRITE time: nothing else mutates
         # this table between the write and its deferred commit (the
         # engine serializes writers per table within a batch)
@@ -741,13 +787,80 @@ class BucketedEntriesTable(VersionedTable):
                     src = self._bucket_dir(cur, b)
                     if os.path.isdir(src):
                         _link_tree(src, self._bucket_dir(v, b))
-            self._write_snapshot_meta(dest, n)
+            self._write_snapshot_meta(self._snapshot_dir(v), n)
             self._set_current(v, meta)
 
         if defer_commit:
             return _commit
         _commit()
         return None
+
+    # -- driver-local twins of read_buckets / write_merged ---------------
+    # A drip-sized watch batch touches a few buckets holding a few
+    # hundred rows; a Spark job to move them costs more than the rows
+    # (the scheduler round trip, task launch and codegen of every
+    # stage). These twins read and write the SAME bucket layout with
+    # pyarrow on the driver — the BucketedMetaTable idea applied to a
+    # data table — so the snapshot protocol (new directory, hardlinked
+    # untouched buckets, pointer flip) and every Spark reader are
+    # unchanged. Callers must have checked the current snapshot is
+    # bucketed (or absent).
+
+    def read_buckets_local(self, bucket_ids: "list[int]") -> dict:
+        """{bucket id: its rows in the CURRENT snapshot} as pyarrow
+        Tables in ``arrow_schema(self.schema)`` (empty for an absent
+        table or bucket)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = arrow_schema(self.schema)
+        v = self._current()
+        if v is not None and not self.current_is_bucketed():
+            raise ValueError(f"{self.root}: current snapshot is not bucketed")
+        out = {}
+        for b in bucket_ids:
+            d = None if v is None else self._bucket_dir(v, b)
+            names = sorted(os.listdir(d)) if d and os.path.isdir(d) else []
+            parts = [
+                pq.ParquetFile(os.path.join(d, n)).read(columns=schema.names).cast(schema)
+                for n in names
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            ]
+            out[b] = pa.concat_tables(parts) if parts else schema.empty_table()
+        return out
+
+    def write_merged_local(
+        self,
+        buckets: "dict[int, object]",
+        meta: "dict | None" = None,
+        defer_commit: bool = False,
+    ):
+        """Driver-local twin of write_merged: ``buckets`` maps every
+        touched bucket id to its full post-merge contents (a pyarrow
+        Table in ``arrow_schema(self.schema)``; an empty one empties
+        the bucket). Each non-empty bucket becomes one parquet file in
+        the new snapshot; commit and ``meta``/``defer_commit`` are
+        write_merged's."""
+        import shutil
+        import uuid
+
+        cur = self._current()
+        if cur is not None and not self.current_is_bucketed():
+            raise ValueError(f"{self.root}: current snapshot is not bucketed")
+        n = self.n_buckets
+        v = (cur or 0) + 1
+        dest = self._snapshot_dir(v)
+        if os.path.isdir(dest):
+            # crash-orphaned dir at this version: overwrite-clears-dest
+            shutil.rmtree(dest, ignore_errors=True)
+        os.makedirs(dest, exist_ok=True)
+        tag = uuid.uuid4().hex
+        for b, t in buckets.items():
+            if t.num_rows:
+                d = self._bucket_dir(v, b)
+                os.makedirs(d, exist_ok=True)
+                write_parquet_atomic(t, f"{d}/part-00000-{tag}.parquet")
+        return self._merged_commit(cur, v, n, list(buckets), meta, defer_commit)
 
 
 # The bucketed layout is generic over its bucket column — the engine
@@ -879,7 +992,7 @@ class BucketedMetaTable(VersionedTable):
             return list(zip(*cols)) if cols and t.num_rows else []
         out: "list[tuple]" = []
         for path in files:
-            t = pq.read_table(path, columns=names)
+            t = pq.ParquetFile(path).read(columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             out.extend(zip(*cols) if cols and t.num_rows else [])
         return out
@@ -964,7 +1077,7 @@ class BucketedMetaTable(VersionedTable):
                 continue
             kept: "list[tuple]" = []
             if os.path.exists(src):
-                t = pq.read_table(src, columns=names)
+                t = pq.ParquetFile(src).read(columns=names)
                 cols = [t.column(n).to_pylist() for n in names]
                 for r in (zip(*cols) if cols and t.num_rows else []):
                     if tuple(r[i] for i in key_cols) not in keys:
@@ -1009,7 +1122,7 @@ class BucketedMetaTable(VersionedTable):
 
                     shutil.copy2(src, self._bucket_path(d, b))
                 continue
-            t = pq.read_table(src, columns=names)
+            t = pq.ParquetFile(src).read(columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             kept = [
                 r
@@ -1081,6 +1194,7 @@ class AppendOnlyLog:
         self.root = root.rstrip("/")
         self.schema = schema
         self.partition_by = tuple(partition_by)
+        self._part_paths: "dict[str, str]" = {}  # value -> directory name
         if int(hash_levels) not in (0, 1):
             raise ValueError(f"hash_levels must be 0 or 1, got {hash_levels}")
         self.hash_levels = int(hash_levels)
@@ -1223,6 +1337,73 @@ class AppendOnlyLog:
             ) + self.partition_by
             wr = wr.partitionBy(*cols)
         wr.parquet(self.root)
+
+    def append_rows(
+        self, rows: "list[tuple]", max_records_per_file: int = 1 << 20
+    ) -> None:
+        """Driver-local append of row tuples (schema field order, already
+        type-checked) — NO Spark job. Writes the layout ``append`` would:
+        one file per partition value (split at ``max_records_per_file``
+        rows) under ``col=value/`` — and ``<col>_hash=xx/`` above it on
+        the two-level layout — with the partition column kept out of
+        the data file, exactly as Spark's partitionBy does. Directory
+        names come from Spark's own escaper, so ``partition_dir``,
+        ``read_origin`` and the stream's partition discovery see the
+        same directory a Spark write would have made. Each file is
+        written under a hidden name and renamed into place, so the
+        watch stream never lists a partial file."""
+        import uuid
+
+        import pyarrow as pa
+
+        if not rows:
+            return
+        names = [f.name for f in self.schema.fields]
+        groups: "dict[str, list[tuple]]" = {}
+        if self.partition_by:
+            idx = names.index(self.partition_by[0])
+            for r in rows:
+                groups.setdefault(r[idx], []).append(r)
+            keep = [i for i, n in enumerate(names) if n not in self.partition_by]
+        else:
+            groups[""] = list(rows)
+            keep = list(range(len(names)))
+        schema = arrow_schema(
+            T.StructType([self.schema.fields[i] for i in keep])
+        )
+        tag = uuid.uuid4().hex
+        for value, part in groups.items():
+            d = self.root
+            if self.partition_by:
+                if self.hash_levels:
+                    d = os.path.join(d, f"{self._hash_col()}={self._hash_of(value)}")
+                d = os.path.join(d, self._partition_path(value))
+            os.makedirs(d, exist_ok=True)
+            step = max(1, int(max_records_per_file))
+            for i in range(0, len(part), step):
+                chunk = part[i : i + step]
+                table = pa.table(
+                    {schema.names[j]: [r[c] for r in chunk] for j, c in enumerate(keep)},
+                    schema=schema,
+                )
+                write_parquet_atomic(
+                    table, os.path.join(d, f"part-{i // step:05d}-{tag}.parquet")
+                )
+
+    def _partition_path(self, value: str) -> str:
+        """``col=escaped-value`` exactly as Spark names the directory
+        (ExternalCatalogUtils.getPartitionPathString), memoized — one
+        JVM call per new origin."""
+        out = self._part_paths.get(value)
+        if out is None:
+            utils = (
+                self.spark.sparkContext._jvm.org.apache.spark.sql.catalyst
+                .catalog.ExternalCatalogUtils
+            )
+            out = self._part_paths[value] = utils.getPartitionPathString(
+                self.partition_by[0], value
+            )
+        return out
 
     # -- retention ----------------------------------------------------
     def partition_dir(self, value: str) -> "str | None":

@@ -27,6 +27,34 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: half
+    of the memory this host (or its cgroup limit) has, clamped to
+    1-16 GiB. The other half is headroom for the JVM's off-heap memory,
+    the Python driver and its workers — a fixed 16g heap on a 15.7 GiB
+    host let the JVM grow until the kernel killed it."""
+    total = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total = int(line.split()[1]) * 1024
+                    break
+    except OSError:
+        pass
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit.isdigit():
+            total = min(total or int(limit), int(limit))
+    except OSError:
+        pass
+    if total is None:
+        return "4g"
+    mib = min(16 << 10, max(1 << 10, total // 2 >> 20))
+    return f"{mib}m"
+
+
 def get_spark(app_name: str = "dat_archive_map_reduce_spark") -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
     cpus = default_parallelism()
@@ -57,7 +85,10 @@ def get_spark(app_name: str = "dat_archive_map_reduce_spark") -> SparkSession:
         # threshold is the crossover, not infinity
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # long-lived sessions accumulate unreferenced localCheckpoint /
         # broadcast blocks until a JVM GC lets ContextCleaner drop them;
         # periodic GC keeps storage memory from crowding execution (the

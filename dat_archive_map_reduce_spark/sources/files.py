@@ -129,21 +129,46 @@ def read_directory_corpus(
     )
 
 
+def changelog_rows(rows: list[dict]) -> "list[tuple]":
+    """Plain dicts -> changelog row tuples in FILES_SCHEMA order, with
+    url filled from origin+pathname and type from 'put' when absent.
+
+    Enforces what ``createDataFrame(..., FILES_SCHEMA)`` verifies, so a
+    driver-local write admits exactly the rows a Spark write would:
+    non-nullable fields must be set, strings must be ``str``, and the
+    version must fit a BIGINT. Raises ValueError / TypeError."""
+    out = []
+    for r in rows:
+        r = dict(r)
+        if "url" not in r:
+            r["url"] = r["origin"] + r["pathname"]
+        r.setdefault("type", "put")
+        r.setdefault("content", None)
+        row = (
+            r["origin"], r["pathname"], r["url"], int(r["version"]),
+            r["type"], r["content"],
+        )
+        for f, v in zip(FILES_SCHEMA.fields, row):
+            if v is None:
+                if not f.nullable:
+                    raise ValueError(f"changelog field {f.name!r} must not be None: {r!r}")
+            elif isinstance(f.dataType, T.StringType) and not isinstance(v, str):
+                raise TypeError(
+                    f"changelog field {f.name!r} must be str, got "
+                    f"{type(v).__name__}: {r!r}"
+                )
+        if not -(1 << 63) <= row[3] < (1 << 63):
+            raise ValueError(f"changelog version out of BIGINT range: {r!r}")
+        out.append(row)
+    return out
+
+
 def changelog_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Build a changelog DataFrame from plain dicts (tests, fixtures).
 
     Fills url from origin+pathname when absent.
     """
-    filled = []
-    for r in rows:
-        r = dict(r)
-        r.setdefault("url", r["origin"] + r["pathname"])
-        r.setdefault("type", "put")
-        r.setdefault("content", None)
-        filled.append(
-            (r["origin"], r["pathname"], r["url"], int(r["version"]), r["type"], r["content"])
-        )
-    return spark.createDataFrame(filled, FILES_SCHEMA)
+    return spark.createDataFrame(changelog_rows(rows), FILES_SCHEMA)
 
 
 def latest_wins(changelog: DataFrame, start: int | None = None, end: int | None = None) -> DataFrame:

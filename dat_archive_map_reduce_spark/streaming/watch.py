@@ -16,6 +16,9 @@ Spark-first translation:
   retract-then-add merge the batch path uses (engine._apply_updates),
   so watch mode converges to the identical state as a cold re-index
   (the reference's test/view.js:187-231 equivalence contract)
+- LevelDB batch write   -> a drip-sized batch is collected and
+  committed on the driver with pyarrow (one Spark job: the collect);
+  larger batches and other folds run as Spark jobs (see _process)
 - exactly-once          -> streaming checkpointLocation + the engine's
   per-(view, origin) offsets; replayed batches are no-ops because
   updates at or below the stored offset are filtered out.
@@ -37,6 +40,7 @@ from dat_archive_map_reduce_spark.sources.files import (
     FILES_SCHEMA,
     glob_filter,
     latest_wins,
+    match_glob,
 )
 
 
@@ -187,116 +191,236 @@ def watch(
                         m["batch_token"] = f"legacy:{tok}"
                         t._set_current(cur, m)
 
+    def _path_key(vdef) -> tuple:
+        return tuple(vdef.path) if isinstance(vdef.path, (list, tuple)) else (vdef.path,)
+
+    def _spark_stage(batch_df: DataFrame, views_snapshot: list, batch_id: int):
+        """The Spark regime for ``views_snapshot`` over the persisted
+        batch: run the probe and the shared map stages now, and return
+        (per-origin target versions, apply, release) — ``apply`` runs
+        every store's merge, ``release`` unpersists the caches."""
+        # ONE probe job: per-origin targets + per-path-group
+        # compacted counts and touched bucket ids (engine
+        # _probe_batch), not one job per distinct (glob, offsets)
+        path_groups: dict = {}
+        for _name, vdef in views_snapshot:
+            path_groups.setdefault(_path_key(vdef), vdef.path)
+        # views sharing a map stage may differ in value_type; the
+        # shared run enforces the strictest declared-integer one
+        # (enforcement is a check, not a transform — the emitted
+        # rows are identical whenever it passes, so the cache
+        # stays shared; run_map docstring)
+        mk_vt: dict = {}
+        for _name, vdef in views_snapshot:
+            if vdef.value_type in ("long", "int", "bigint"):
+                mk_vt[(_path_key(vdef), vdef.map, tuple(vdef.key_schema))] = vdef.value_type
+        from concurrent.futures import ThreadPoolExecutor
+
+        # the probe job and the Python map stage both read only the
+        # persisted batch and neither needs the other's output, so
+        # they run CONCURRENTLY (serializing them put the two
+        # largest per-batch fixed costs end-to-end). The map is
+        # materialized OPTIMISTICALLY for every (path, map, schema)
+        # group before the probe says which groups matched — a
+        # group with no matching files costs one empty-input job,
+        # and the stream only fires when files arrived at all.
+        upd_cache: dict = {}  # path-key -> cached compacted updates
+        mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
+
+        def release() -> None:
+            for df in mapped.values():
+                df.unpersist()
+            for upd in upd_cache.values():
+                upd.unpersist()
+
+        with ThreadPoolExecutor(max_workers=1) as probe_pool:
+            probe_fut = probe_pool.submit(engine._probe_batch, batch_df, path_groups)
+            try:
+                for name, vdef in views_snapshot:
+                    pk = _path_key(vdef)
+                    if pk not in upd_cache:
+                        upd_cache[pk] = latest_wins(
+                            glob_filter(batch_df, vdef.path)
+                        ).cache()
+                    mk = (pk, vdef.map, tuple(vdef.key_schema))
+                    if mk not in mapped:
+                        # views sharing (path, map fn, key schema)
+                        # share ONE Python map stage per batch (the
+                        # mapped+reduced twin-view pattern halves
+                        # the dominant per-batch Python cost)
+                        mapped[mk] = run_map(
+                            upd_cache[pk].filter(F.col("type") == "put"),
+                            vdef.map,
+                            vdef.key_types(),
+                            value_type=mk_vt.get(mk),
+                        ).cache()
+                # materialize each shared map output ONCE before
+                # the concurrent view applies race to read it —
+                # concurrently: sequential counts would serialize
+                # the dominant Python map cost and make a
+                # multi-group batch's wall the SUM of its map
+                # stages instead of the max
+                if len(mapped) > 1:
+                    with ThreadPoolExecutor(max_workers=min(len(mapped), 4)) as mp:
+                        list(mp.map(lambda df: df.count(), mapped.values()))
+                else:
+                    for df in mapped.values():
+                        df.count()
+                per_origin, g_counts, g_buckets = probe_fut.result()
+            except BaseException:
+                # a raising user map fn (or a dying job) must not
+                # leak the pinned caches on every foreachBatch
+                # retry of a persistently-failing stream
+                release()
+                raise
+
+        def apply(origins: list) -> None:
+            if not origins:
+                return
+            # apply STORES concurrently — views sharing an entries
+            # store (map-twins) are grouped into ONE
+            # _apply_store_batch call (one merge + per-view
+            # re-aggregation; concurrent per-view merges of a shared
+            # store would race the snapshot version and double the
+            # entry-write IO). Distinct stores are disjoint storage,
+            # so their merges run as parallel Spark jobs and the batch
+            # wall is ~the slowest store, not the sum. Every row of
+            # the batch applies (start=-1 admits version-0 rows).
+            groups: dict = {}  # store key -> [view defs]
+            for _name, vdef in views_snapshot:
+                groups.setdefault(engine._store_key(vdef), []).append(vdef)
+
+            def _apply_group(vdefs):
+                pk = _path_key(vdefs[0])
+                engine._apply_store_batch(
+                    vdefs,
+                    batch_df,
+                    {origin: -1 for origin in origins},
+                    prepared=(upd_cache[pk], g_counts[pk], g_buckets[pk]),
+                    mapped=mapped.get((pk, vdefs[0].map, tuple(vdefs[0].key_schema))),
+                    batch_token=_batch_token(batch_id),
+                )
+
+            gs = list(groups.values())
+            if len(gs) > 1:
+                with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
+                    list(pool.map(_apply_group, gs))
+            elif gs:
+                _apply_group(gs[0])
+
+        return per_origin, apply, release
+
+    def _collect_bounded(batch_df: DataFrame) -> "list[dict] | None":
+        """The batch's rows on the driver, or None when it is over the
+        driver regime's bounds: engine._LOCAL_BATCH_ROWS rows and
+        engine._LOCAL_BATCH_BYTES of content. ONE Spark job collects
+        at most BOUND+1 rows (the single partition keeps the limit
+        from scaling up over a second job) with each row's content
+        size, and the content itself only up to
+        engine._LOCAL_INLINE_BYTES per row — so the collect holds at
+        most BOUND x that cap, whatever the batch. Only a batch with
+        a larger file under the byte cap pays a second job for the
+        full rows."""
+        size = F.octet_length("content")
+        inline = engine._LOCAL_INLINE_BYTES
+        got = (
+            batch_df.coalesce(1)
+            .select(
+                *[f.name for f in FILES_SCHEMA.fields if f.name != "content"],
+                F.when(size <= inline, F.col("content")).alias("content"),
+                size.alias("_bytes"),
+            )
+            .limit(engine._LOCAL_BATCH_ROWS + 1)
+            .collect()
+        )
+        if len(got) > engine._LOCAL_BATCH_ROWS:
+            return None
+        sizes = [r["_bytes"] or 0 for r in got]
+        if sum(sizes) > engine._LOCAL_BATCH_BYTES:
+            return None
+        if any(b > inline for b in sizes):
+            got = batch_df.collect()
+        return [
+            {f.name: r[f.name] for f in FILES_SCHEMA.fields} for r in got
+        ]
+
+    def _local_stage(rows: list, views_snapshot: list, batch_id: int):
+        """The driver regime: prepare every eligible store's commit from
+        the collected rows (latest-wins and the glob filter in Python,
+        engine._prepare_store_batch_local for the rest). Returns (the
+        commits, the views left to the Spark regime)."""
+        groups: dict = {}  # store key -> [view defs]
+        for _name, vdef in views_snapshot:
+            groups.setdefault(engine._store_key(vdef), []).append(vdef)
+        commits, spark_views = [], []
+        for vdefs in groups.values():
+            latest: dict = {}  # (origin, pathname) -> newest row
+            for r in rows:
+                if match_glob(vdefs[0].path, r["pathname"]):
+                    k = (r["origin"], r["pathname"])
+                    if k not in latest or r["version"] > latest[k]["version"]:
+                        latest[k] = r
+            upd = list(latest.values())
+            commit = None
+            if engine._local_store_eligible(vdefs, {r["origin"] for r in upd}):
+                commit = engine._prepare_store_batch_local(
+                    vdefs, upd, _batch_token(batch_id)
+                )
+            if commit is None:
+                spark_views += [(v.name, v) for v in vdefs]
+            else:
+                commits.append(commit)
+        return commits, spark_views
+
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if not restamped:
             restamped.append(True)
             _neutralize_legacy_tokens(batch_id)
-        # Per-batch fixed costs are the watch path's throughput ceiling
-        # (bench maintain_curve), so the cycle is structured to pay
-        # each one ONCE per micro-batch, not once per (origin, view):
-        # one persisted scan of the batch, one offsets read, one
-        # re-aggregation per reduced view over the union of all
-        # origins' affected keys, one offsets rewrite. The per-origin
-        # entries writes remain — per-origin sharding is what makes
-        # retraction a one-shard rewrite.
-        batch_df = batch_df.persist()
+        # Per-batch cost, two regimes (README, watch section). A batch
+        # of at most engine._LOCAL_BATCH_ROWS rows is collected, and
+        # every store whose views all take the exact count/integer-sum
+        # delta commits on the DRIVER — the map run in-process, pyarrow
+        # reads and writes of the touched buckets: ONE Spark job per
+        # batch (the collect). A drip batch of 8 changes on 2 origins
+        # is visible ~0.6 s after its append on the 500 ms trigger,
+        # most of it the trigger wait and the stream's own planning
+        # (traced perfbench drip run, 4 cores). Larger batches, and
+        # stores with any other view, take the SPARK regime: one probe
+        # job, one map job per (glob, map), then per store the merge
+        # and re-aggregation jobs — ~40 jobs and ~6.4 s for the same
+        # drip batch, but the only regime that runs a batch too large
+        # to collect. Both apply the same retract-then-add merge and
+        # delta arithmetic and commit identical state; either way the
+        # per-batch costs are paid ONCE per batch, not once per
+        # (origin, view).
+        #
+        # snapshot the view registry ONCE per batch: the planning and
+        # apply loops must see the same set — a view define()d
+        # concurrently would otherwise KeyError mid-batch and kill
+        # the stream; with the snapshot a late view joins next batch
+        views_snapshot = list(engine.views.items())
+        rows = None
+        if not views_snapshot or any(
+            engine._local_store_eligible([v], None) for _n, v in views_snapshot
+        ):
+            rows = _collect_bounded(batch_df)
+        local_commits, spark_views = [], views_snapshot
+        if rows is not None:
+            local_commits, spark_views = _local_stage(rows, views_snapshot, batch_id)
+            per_origin: dict = {}
+            for r in rows:
+                per_origin[r["origin"]] = max(r["version"], per_origin.get(r["origin"], 0))
+        spark = None
+        if rows is None or spark_views:
+            batch_df = batch_df.persist()
+            try:
+                spark = _spark_stage(batch_df, spark_views, batch_id)
+            except BaseException:
+                batch_df.unpersist()
+                raise
+            if rows is None:
+                per_origin = spark[0]
         try:
-            # snapshot the view registry ONCE per batch: the probe's
-            # path_groups and the plan loop below must see the same
-            # set — a view define()d concurrently between the two
-            # iterations would otherwise KeyError at g_counts[pk]
-            # (or RuntimeError mid-iteration) and kill the stream;
-            # with the snapshot a late view simply joins next batch
-            views_snapshot = list(engine.views.items())
-            # ONE probe job: per-origin targets + per-path-group
-            # compacted counts and touched bucket ids (engine
-            # _probe_batch) — the r10 flow paid a second job per
-            # distinct (glob, offsets) for the counts
-            path_groups: dict = {}
-            for _name, vdef in views_snapshot:
-                pk = (
-                    tuple(vdef.path)
-                    if isinstance(vdef.path, (list, tuple))
-                    else (vdef.path,)
-                )
-                path_groups.setdefault(pk, vdef.path)
-            # views sharing a map stage may differ in value_type; the
-            # shared run enforces the strictest declared-integer one
-            # (enforcement is a check, not a transform — the emitted
-            # rows are identical whenever it passes, so the cache
-            # stays shared; run_map docstring, r13 ADVICE)
-            mk_vt: dict = {}
-            for _name, vdef in views_snapshot:
-                pk0 = (
-                    tuple(vdef.path)
-                    if isinstance(vdef.path, (list, tuple))
-                    else (vdef.path,)
-                )
-                if vdef.value_type in ("long", "int", "bigint"):
-                    mk_vt[(pk0, vdef.map, tuple(vdef.key_schema))] = vdef.value_type
-            from concurrent.futures import ThreadPoolExecutor
-
-            # the probe job and the Python map stage both read only the
-            # persisted batch and neither needs the other's output, so
-            # they run CONCURRENTLY (r14: serializing them put the two
-            # largest per-batch fixed costs end-to-end). The map is
-            # materialized OPTIMISTICALLY for every (path, map, schema)
-            # group before the probe says which groups matched — a
-            # group with no matching files costs one empty-input job,
-            # and the stream only fires when files arrived at all.
-            upd_cache: dict = {}  # path-key -> cached compacted updates
-            mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
-            with ThreadPoolExecutor(max_workers=1) as probe_pool:
-                probe_fut = probe_pool.submit(
-                    engine._probe_batch, batch_df, path_groups
-                )
-                try:
-                    for name, vdef in views_snapshot:
-                        pk = (
-                            tuple(vdef.path)
-                            if isinstance(vdef.path, (list, tuple))
-                            else (vdef.path,)
-                        )
-                        if pk not in upd_cache:
-                            upd_cache[pk] = latest_wins(
-                                glob_filter(batch_df, vdef.path)
-                            ).cache()
-                        mk = (pk, vdef.map, tuple(vdef.key_schema))
-                        if mk not in mapped:
-                            # views sharing (path, map fn, key schema)
-                            # share ONE Python map stage per batch (the
-                            # mapped+reduced twin-view pattern halves
-                            # the dominant per-batch Python cost)
-                            mapped[mk] = run_map(
-                                upd_cache[pk].filter(F.col("type") == "put"),
-                                vdef.map,
-                                vdef.key_types(),
-                                value_type=mk_vt.get(mk),
-                            ).cache()
-                    # materialize each shared map output ONCE before
-                    # the concurrent view applies race to read it —
-                    # concurrently: sequential counts would serialize
-                    # the dominant Python map cost and make a
-                    # multi-group batch's wall the SUM of its map
-                    # stages instead of the max (the r10 pool shape)
-                    if len(mapped) > 1:
-                        with ThreadPoolExecutor(
-                            max_workers=min(len(mapped), 4)
-                        ) as mp:
-                            list(mp.map(lambda df: df.count(), mapped.values()))
-                    else:
-                        for df in mapped.values():
-                            df.count()
-                except BaseException:
-                    # a raising user map fn (or a dying job) must not
-                    # leak the pinned caches on every foreachBatch
-                    # retry of a persistently-failing stream
-                    for df in mapped.values():
-                        df.unpersist()
-                    for upd in upd_cache.values():
-                        upd.unpersist()
-                    raise
-                per_origin, g_counts, g_buckets = probe_fut.result()
             origins = sorted(per_origin)
             for origin in origins:
                 engine._indexed_origins.add(origin)
@@ -316,25 +440,19 @@ def watch(
                 if origins
                 else {}
             )
+            # The offsets table is PROGRESS METADATA here, never a row
+            # filter: the parquet file stream already delivers each
+            # changelog file exactly once, so gating rows on version >
+            # stored offset would silently DROP data whenever one
+            # version's files span micro-batches (the offset advances
+            # after the first slice; the second slice then fails the
+            # gate). Every row of the batch applies. Re-delivery
+            # happens only on batch replay or a fresh checkpoint over
+            # an already-indexed warehouse — both converge, because
+            # the merge is retract-then-add and in-batch latest-wins
+            # keeps the newest version.
             offset_updates = []
-            # Pass 1 (driver-side planning). The offsets table is
-            # PROGRESS METADATA here, never a row filter: the parquet
-            # file stream already delivers each changelog file exactly
-            # once, so gating rows on version > stored offset would
-            # silently DROP data whenever one version's files span
-            # micro-batches (the offset advances after the first
-            # slice; the second slice then fails the gate). Every row
-            # of the batch applies. Re-delivery happens only on batch
-            # replay or a fresh checkpoint over an already-indexed
-            # warehouse — both converge, because the merge is
-            # retract-then-add and in-batch latest-wins keeps the
-            # newest version. Views watching the SAME glob share one
-            # compaction per batch. start=-1 admits version-0 rows
-            # (directory-corpus imports use version=0 puts).
-            plan = []  # (name, vdef, origin_starts, path-key, map-key)
-            shared: dict = {}  # path-key -> (cached updates, counts, buckets)
-            for name, vdef in views_snapshot:
-                origin_starts = {origin: -1 for origin in origins}
+            for name, _vdef in views_snapshot:
                 for origin in origins:
                     target = per_origin[origin]
                     engine._emit(
@@ -342,95 +460,48 @@ def watch(
                     )
                     if target > offsets.get((name, origin), 0):
                         offset_updates.append((name, origin, target))
-                pk = mk = None
-                if origin_starts:
-                    pk = (
-                        tuple(vdef.path)
-                        if isinstance(vdef.path, (list, tuple))
-                        else (vdef.path,)
-                    )
-                    if pk not in shared:
-                        shared[pk] = (
-                            upd_cache[pk],
-                            g_counts[pk],
-                            g_buckets[pk],
-                        )
-                    mk = (pk, vdef.map, tuple(vdef.key_schema))
-                plan.append((name, vdef, origin_starts, pk, mk))
-            # Pass 2: apply STORES concurrently — views sharing an
-            # entries store (map-twins, r14 verdict #5) are grouped
-            # into ONE _apply_store_batch call (one merge + per-view
-            # re-aggregation; concurrent per-view merges of a shared
-            # store would race the snapshot version and double the
-            # entry-write IO). Distinct stores are disjoint storage,
-            # so their merges run as parallel Spark jobs and the batch
-            # wall is ~the slowest store, not the sum.
-            try:
-                todo = [t for t in plan if t[2]]
-                groups: dict = {}  # store key -> [plan tuples]
-                for t in todo:
-                    groups.setdefault(engine._store_key(t[1]), []).append(t)
-
-                def _apply_group(grp):
-                    lead = grp[0]
-                    engine._apply_store_batch(
-                        [t[1] for t in grp],
-                        batch_df,
-                        lead[2],
-                        prepared=shared[lead[3]],
-                        mapped=mapped.get(lead[4]),
-                        batch_token=_batch_token(batch_id),
-                    )
-
-                gs = list(groups.values())
-                if len(gs) > 1:
-                    with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
-                        list(pool.map(_apply_group, gs))
-                elif gs:
-                    _apply_group(gs[0])
-            finally:
-                for df in mapped.values():
-                    df.unpersist()
-                for upd in upd_cache.values():
-                    upd.unpersist()
-            for name, *_ in plan:
-                for origin in origins:
-                    engine._emit(
-                        "archive-indexed",
-                        origin=origin,
-                        view=name,
-                        version=per_origin[origin],
-                    )
-            engine._set_offsets(offset_updates)
+            if origins:
+                for commit in local_commits:
+                    commit()
+                if spark is not None:
+                    spark[1](origins)
+        finally:
+            if spark is not None:
+                spark[2]()
+                batch_df.unpersist()
+        for name, _vdef in views_snapshot:
             for origin in origins:
                 engine._emit(
-                    "indexes-updated", origin=origin, version=per_origin[origin]
+                    "archive-indexed",
+                    origin=origin,
+                    view=name,
+                    version=per_origin[origin],
                 )
+        engine._set_offsets(offset_updates)
+        for origin in origins:
+            engine._emit(
+                "indexes-updated", origin=origin, version=per_origin[origin]
+            )
+        if (
+            vacuum_every is not None
+            or changelog_expire_every is not None
+            or rebucket_every is not None
+        ):
+            batch_counter[0] += 1
+            # rebucket BEFORE vacuum so the superseded
+            # pre-migration snapshot is trimmable in the same
+            # firing when both cadences coincide
+            if rebucket_every is not None and batch_counter[0] % rebucket_every == 0:
+                engine.auto_rebucket_entries(rebucket_bytes)
+            if vacuum_every is not None and batch_counter[0] % vacuum_every == 0:
+                engine.vacuum(keep_last=vacuum_keep)
             if (
-                vacuum_every is not None
-                or changelog_expire_every is not None
-                or rebucket_every is not None
+                changelog_expire_every is not None
+                and batch_counter[0] % changelog_expire_every == 0
             ):
-                batch_counter[0] += 1
-                # rebucket BEFORE vacuum so the superseded
-                # pre-migration snapshot is trimmable in the same
-                # firing when both cadences coincide
-                if (
-                    rebucket_every is not None
-                    and batch_counter[0] % rebucket_every == 0
-                ):
-                    engine.auto_rebucket_entries(rebucket_bytes)
-                if vacuum_every is not None and batch_counter[0] % vacuum_every == 0:
-                    engine.vacuum(keep_last=vacuum_keep)
-                if (
-                    changelog_expire_every is not None
-                    and batch_counter[0] % changelog_expire_every == 0
-                ):
-                    engine._expire_changelog_unsafe()
-            if on_batch is not None:
-                on_batch(batch_id, len(origins))
-        finally:
-            batch_df.unpersist()
+                engine._expire_changelog_unsafe()
+        if on_batch is not None:
+            on_batch(batch_id, len(origins))
 
     writer = (
         stream.writeStream.foreachBatch(_process)

@@ -38,14 +38,21 @@ def _reduced_pairs(db, view):
     )
 
 
-def test_sum_delta_stream_equals_batch_bit_exact(spark, tmp_path):
+def test_sum_delta_stream_equals_batch_bit_exact(spark, tmp_path, watch_regime):
     """reduce='sum' over declared-long values takes the exact delta
     path under watch and lands BIT-IDENTICAL reduced state to a
     batch-indexed twin (whose re-agg takes the general refold),
     across: multi-entry keys, a value replacement (count delta 0,
     sum delta != 0), delete-on-empty (all entries of a key retract),
     and a key whose remaining entries sum to 0 (must STAY — the
-    sidecar count, not the sum, drives deletion)."""
+    sidecar count, not the sum, drives deletion). In both watch
+    regimes."""
+    for regime in ("driver", "spark"):
+        with watch_regime(regime):
+            _check_sum_delta_bit_exact(spark, tmp_path / regime)
+
+
+def _check_sum_delta_bit_exact(spark, tmp_path):
     db = MapReduce(spark, str(tmp_path / "wh-s"))
     db.define("s", path="/d/*.json", map=map_sum, reduce="sum",
               key_schema=["string"], value_type="long")

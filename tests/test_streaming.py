@@ -36,11 +36,17 @@ def rows_for(i, version=1, suffix=""):
     ]
 
 
-def test_watch_converges_to_batch_state(spark, tmp_path):
+def test_watch_converges_to_batch_state(spark, tmp_path, watch_regime):
     """Index via watch-mode streaming; assert identical state to a
-    batch-indexed twin engine."""
-    wh_stream = str(tmp_path / "wh_stream")
-    wh_batch = str(tmp_path / "wh_batch")
+    batch-indexed twin engine — in both watch regimes."""
+    for regime in ("driver", "spark"):
+        with watch_regime(regime):
+            _check_watch_converges(spark, tmp_path / regime)
+
+
+def _check_watch_converges(spark, base):
+    wh_stream = str(base / "wh_stream")
+    wh_batch = str(base / "wh_batch")
     engines = []
     for wh in (wh_stream, wh_batch):
         db = MapReduce(spark, wh)
@@ -67,10 +73,16 @@ def test_watch_converges_to_batch_state(spark, tmp_path):
     assert dbs.list("multi-reduced") == dbb.list("multi-reduced")
 
 
-def test_watch_incremental_update_retracts(spark, tmp_path):
+def test_watch_incremental_update_retracts(spark, tmp_path, watch_regime):
     """Second watch drain after file rewrites retracts old keys
-    (update semantics under continuous ingestion)."""
-    db = MapReduce(spark, str(tmp_path / "wh"))
+    (update semantics under continuous ingestion), in both regimes."""
+    for regime in ("driver", "spark"):
+        with watch_regime(regime):
+            _check_incremental_update_retracts(spark, tmp_path / regime)
+
+
+def _check_incremental_update_retracts(spark, base):
+    db = MapReduce(spark, str(base / "wh"))
     db.define("multi", path="/multi/*.json", map=map_first, key_schema=["string"])
     db.define("multi-reduced", path="/multi/*.json", map=map_origin_one,
               reduce="count", key_schema=["string"])
@@ -1249,7 +1261,7 @@ def test_streaming_contamination_equals_batch(spark, tmp_path):
     blocklist.unpersist()
 
 
-def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
+def test_count_delta_reaggregation_exactly_once(spark, tmp_path, watch_regime):
     """The r12 count-delta re-aggregation path: a watch drain over a
     reduce='count' view must (1) land the identical state as a
     batch-indexed twin (delta == refold, integers), (2) stamp the
@@ -1258,7 +1270,15 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
     the crash window where the reduced table committed but the
     entries merges did not — the replayed batch re-runs the merges
     idempotently while the token guard keeps the delta from
-    double-applying."""
+    double-applying. In both watch regimes: the driver regime replays
+    its own crash window (reduced flipped, entries writes failed)."""
+    for regime in ("driver", "spark"):
+        with watch_regime(regime):
+            _check_exactly_once(spark, tmp_path / regime, regime)
+
+
+def _check_exactly_once(spark, tmp_path, regime):
+
     wh = str(tmp_path / "wh-delta")
     db = MapReduce(spark, wh)
     db.define("k", path="/d/*.json", map=map_first, key_schema=["string"])
@@ -1292,12 +1312,17 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
     from dat_archive_map_reduce_spark.plans.catalog import empty_df
 
     v_before = red._current()
-    bogus = db._entries_table("kc", "dat://c0").read()  # nonzero rows
-    db._reaggregate_exact_delta(
-        db._view("kc"), bogus, empty_df(spark, entries_schema(
-            db._view("kc").key_types())).select("key", "key_json"),
-        batch_token=tok1,
-    )
+    if regime == "driver":
+        assert db._local_reduced_commits(
+            db._view("kc"), "count", {'"key0"': [{"k0": "key0"}, 5, 0]}, tok1
+        ) == [], "replayed token must skip"
+    else:
+        bogus = db._entries_table("kc", "dat://c0").read()  # nonzero rows
+        db._reaggregate_exact_delta(
+            db._view("kc"), bogus, empty_df(spark, entries_schema(
+                db._view("kc").key_types())).select("key", "key_json"),
+            batch_token=tok1,
+        )
     assert red._current() == v_before, "replayed token must skip"
 
     # (2)+(4) crash window: v2 updates — commit the reduced delta with
@@ -1308,40 +1333,43 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
          "content": json.dumps({"first": "keyX", "second": 0,
                                 "third": "t"})}
     ]
-    from dat_archive_map_reduce_spark.operators.map_reduce import run_map
-    from dat_archive_map_reduce_spark.sources.files import (
-        changelog_from_rows,
-        glob_filter,
-        latest_wins,
-    )
+    if regime == "driver":
+        _driver_crash_window_replay(db, upd_rows)
+    else:
+        from dat_archive_map_reduce_spark.operators.map_reduce import run_map
+        from dat_archive_map_reduce_spark.sources.files import (
+            changelog_from_rows,
+            glob_filter,
+            latest_wins,
+        )
 
-    vdef = db._view("kc")
-    upd = latest_wins(
-        glob_filter(changelog_from_rows(spark, upd_rows), vdef.path)
-    ).cache()
-    new_e = run_map(
-        upd.filter(F.col("type") == "put"), vdef.map, vdef.key_types()
-    ).cache()
-    counts = {"dat://c0": 1}
-    buckets = {"dat://c0": sorted(
-        r["b"] for r in upd.select(
-            db._entries_table("kc", "dat://c0").bucket_expr("url").alias("b")
-        ).distinct().collect())}
-    tok2 = 999_001
-    db._reaggregate_exact_delta(
-        vdef, new_e,
-        db._retracted_rows_premerge(vdef, upd, counts, buckets),
-        batch_token=tok2,
-    )
-    # crash happened here: reduced reflects v2, entries still v1.
-    # replay of the full batch with the same token:
-    db._apply_view_batch(
-        vdef, upd, {"dat://c0": -1},
-        prepared=(upd, counts, buckets), mapped=new_e,
-        batch_token=tok2,
-    )
-    upd.unpersist()
-    new_e.unpersist()
+        vdef = db._view("kc")
+        upd = latest_wins(
+            glob_filter(changelog_from_rows(spark, upd_rows), vdef.path)
+        ).cache()
+        new_e = run_map(
+            upd.filter(F.col("type") == "put"), vdef.map, vdef.key_types()
+        ).cache()
+        counts = {"dat://c0": 1}
+        buckets = {"dat://c0": sorted(
+            r["b"] for r in upd.select(
+                db._entries_table("kc", "dat://c0").bucket_expr("url").alias("b")
+            ).distinct().collect())}
+        tok2 = 999_001
+        db._reaggregate_exact_delta(
+            vdef, new_e,
+            db._retracted_rows_premerge(vdef, upd, counts, buckets),
+            batch_token=tok2,
+        )
+        # crash happened here: reduced reflects v2, entries still v1.
+        # replay of the full batch with the same token:
+        db._apply_view_batch(
+            vdef, upd, {"dat://c0": -1},
+            prepared=(upd, counts, buckets), mapped=new_e,
+            batch_token=tok2,
+        )
+        upd.unpersist()
+        new_e.unpersist()
     # final state equals a batch twin that saw v1+v2
     dbb.append_changes(upd_rows)
     dbb.index("dat://c0")
@@ -1349,6 +1377,39 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
     assert db.get("kc", "keyX") == {"key": "keyX", "value": 1}
     db.close()
     dbb.close()
+
+
+def _driver_crash_window_replay(db, upd_rows):
+    """Driver-regime crash window: the batch's reduced delta commits
+    with a new token, then the entries writes fail; replaying the
+    whole batch with the same token must skip the reduced table and
+    apply the entries merges."""
+    from dat_archive_map_reduce_spark.plans.catalog import BucketedEntriesTable
+    from dat_archive_map_reduce_spark.sources.files import FILES_SCHEMA, changelog_rows
+
+    names = [f.name for f in FILES_SCHEMA.fields]
+    upd = [dict(zip(names, r)) for r in changelog_rows(upd_rows)]
+    vdefs = [db._view("k"), db._view("kc")]
+    assert db._store_key(vdefs[0]) == db._store_key(vdefs[1])
+    tok2 = "lineage:999001"
+    red = db._reduced_table("kc")
+    write = BucketedEntriesTable.write_merged_local
+
+    def crash(self, *a, **k):
+        if "/reduced" not in self.root:
+            raise RuntimeError("crash before the entries writes")
+        return write(self, *a, **k)
+
+    BucketedEntriesTable.write_merged_local = crash
+    try:
+        with pytest.raises(RuntimeError, match="crash"):
+            db._prepare_store_batch_local(vdefs, upd, tok2)()
+    finally:
+        BucketedEntriesTable.write_merged_local = write
+    assert red.manifest_meta()["batch_token"] == tok2
+    v_red = red._current()
+    db._prepare_store_batch_local(vdefs, upd, tok2)()  # the replay
+    assert red._current() == v_red, "the replay must skip the reduced table"
 
 
 def test_two_level_layout_count_delta_rebucket_integration(spark, tmp_path):
@@ -1411,13 +1472,19 @@ def test_two_level_layout_count_delta_rebucket_integration(spark, tmp_path):
     dbb.close()
 
 
-def test_count_delta_interleaved_with_batch_refold(spark, tmp_path):
+def test_count_delta_interleaved_with_batch_refold(spark, tmp_path, watch_regime):
     """Stream (count-delta, token) -> BATCH index (general refold —
     erases the token) -> stream again (count-delta): every ordering
     must converge to the pure-batch twin. The refold recomputes from
     entries, re-aligning reduced with entries, so the next delta is
     computed against consistent state (the docstring's composition
-    argument, pinned)."""
+    argument, pinned). In both watch regimes."""
+    for regime in ("driver", "spark"):
+        with watch_regime(regime):
+            _check_count_delta_interleaved(spark, tmp_path / regime)
+
+
+def _check_count_delta_interleaved(spark, tmp_path):
     wh = str(tmp_path / "wh-mix")
     db = MapReduce(spark, wh)
     db.define("kc", path="/d/*.json", map=map_first, reduce="count",

@@ -377,7 +377,7 @@ class VersionedTable:
         names = [f.name for f in self.schema.fields]
         out: list[tuple] = []
         for path in sorted(_glob.glob(f"{self._snapshot_dir(v)}/*.parquet")):
-            t = pq.ParquetFile(path).read(columns=names)
+            t = pq.read_table(path, columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             out.extend(zip(*cols) if cols and t.num_rows else [])
         return out
@@ -795,6 +795,39 @@ class BucketedEntriesTable(VersionedTable):
         _commit()
         return None
 
+    def _fresh_snapshot_dir(self, v: int) -> str:
+        """Empty directory for snapshot ``v``. A crash-orphaned dir at
+        this version is cleared first: the overwrite-clears-dest
+        convention of every writer."""
+        import shutil
+
+        dest = self._snapshot_dir(v)
+        if os.path.isdir(dest):
+            shutil.rmtree(dest, ignore_errors=True)
+        os.makedirs(dest, exist_ok=True)
+        return dest
+
+    def commit_staged(
+        self,
+        src_root: str,
+        n: int,
+        touched_ids: "list[int]",
+        meta: "dict | None" = None,
+    ) -> None:
+        """Commit the next snapshot from ``_b=<id>`` bucket dirs that a
+        multi-table Spark job already wrote under ``src_root``: move them
+        into a fresh snapshot dir, then _merged_commit at layout ``n``.
+        A touched bucket with no written dir is now EMPTY — correct, and
+        why only untouched buckets hardlink."""
+        cur = self._current()
+        v = (cur or 0) + 1
+        dest = self._fresh_snapshot_dir(v)
+        if os.path.isdir(src_root):
+            for bd in os.listdir(src_root):
+                if bd.startswith("_b="):
+                    os.rename(f"{src_root}/{bd}", f"{dest}/{bd}")
+        self._merged_commit(cur, v, n, touched_ids, meta, False)
+
     # -- driver-local twins of read_buckets / write_merged ---------------
     # A drip-sized watch batch touches a few buckets holding a few
     # hundred rows; a Spark job to move them costs more than the rows
@@ -841,7 +874,6 @@ class BucketedEntriesTable(VersionedTable):
         the bucket). Each non-empty bucket becomes one parquet file in
         the new snapshot; commit and ``meta``/``defer_commit`` are
         write_merged's."""
-        import shutil
         import uuid
 
         cur = self._current()
@@ -849,11 +881,7 @@ class BucketedEntriesTable(VersionedTable):
             raise ValueError(f"{self.root}: current snapshot is not bucketed")
         n = self.n_buckets
         v = (cur or 0) + 1
-        dest = self._snapshot_dir(v)
-        if os.path.isdir(dest):
-            # crash-orphaned dir at this version: overwrite-clears-dest
-            shutil.rmtree(dest, ignore_errors=True)
-        os.makedirs(dest, exist_ok=True)
+        self._fresh_snapshot_dir(v)
         tag = uuid.uuid4().hex
         for b, t in buckets.items():
             if t.num_rows:
@@ -992,7 +1020,7 @@ class BucketedMetaTable(VersionedTable):
             return list(zip(*cols)) if cols and t.num_rows else []
         out: "list[tuple]" = []
         for path in files:
-            t = pq.ParquetFile(path).read(columns=names)
+            t = pq.read_table(path, columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             out.extend(zip(*cols) if cols and t.num_rows else [])
         return out
@@ -1077,7 +1105,7 @@ class BucketedMetaTable(VersionedTable):
                 continue
             kept: "list[tuple]" = []
             if os.path.exists(src):
-                t = pq.ParquetFile(src).read(columns=names)
+                t = pq.read_table(src, columns=names)
                 cols = [t.column(n).to_pylist() for n in names]
                 for r in (zip(*cols) if cols and t.num_rows else []):
                     if tuple(r[i] for i in key_cols) not in keys:
@@ -1122,7 +1150,7 @@ class BucketedMetaTable(VersionedTable):
 
                     shutil.copy2(src, self._bucket_path(d, b))
                 continue
-            t = pq.ParquetFile(src).read(columns=names)
+            t = pq.read_table(src, columns=names)
             cols = [t.column(n).to_pylist() for n in names]
             kept = [
                 r
@@ -1338,16 +1366,14 @@ class AppendOnlyLog:
             wr = wr.partitionBy(*cols)
         wr.parquet(self.root)
 
-    def append_rows(
-        self, rows: "list[tuple]", max_records_per_file: int = 1 << 20
-    ) -> None:
+    def append_rows(self, rows: "list[tuple]") -> None:
         """Driver-local append of row tuples (schema field order, already
         type-checked) — NO Spark job. Writes the layout ``append`` would:
-        one file per partition value (split at ``max_records_per_file``
-        rows) under ``col=value/`` — and ``<col>_hash=xx/`` above it on
-        the two-level layout — with the partition column kept out of
-        the data file, exactly as Spark's partitionBy does. Directory
-        names come from Spark's own escaper, so ``partition_dir``,
+        one file per partition value under ``col=value/`` — and
+        ``<col>_hash=xx/`` above it on the two-level layout — with the
+        partition column kept out of the data file, exactly as Spark's
+        partitionBy does. Directory names come from Spark's own
+        escaper, so ``partition_dir``,
         ``read_origin`` and the stream's partition discovery see the
         same directory a Spark write would have made. Each file is
         written under a hidden name and renamed into place, so the
@@ -1379,16 +1405,11 @@ class AppendOnlyLog:
                     d = os.path.join(d, f"{self._hash_col()}={self._hash_of(value)}")
                 d = os.path.join(d, self._partition_path(value))
             os.makedirs(d, exist_ok=True)
-            step = max(1, int(max_records_per_file))
-            for i in range(0, len(part), step):
-                chunk = part[i : i + step]
-                table = pa.table(
-                    {schema.names[j]: [r[c] for r in chunk] for j, c in enumerate(keep)},
-                    schema=schema,
-                )
-                write_parquet_atomic(
-                    table, os.path.join(d, f"part-{i // step:05d}-{tag}.parquet")
-                )
+            table = pa.table(
+                {schema.names[j]: [r[c] for r in part] for j, c in enumerate(keep)},
+                schema=schema,
+            )
+            write_parquet_atomic(table, os.path.join(d, f"part-00000-{tag}.parquet"))
 
     def _partition_path(self, value: str) -> str:
         """``col=escaped-value`` exactly as Spark names the directory

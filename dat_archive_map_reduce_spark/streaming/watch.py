@@ -384,13 +384,16 @@ def watch(
         # batch (the collect). A drip batch of 8 changes on 2 origins
         # is visible ~0.6 s after its append on the 500 ms trigger,
         # most of it the trigger wait and the stream's own planning
-        # (traced perfbench drip run, 4 cores). Larger batches, and
-        # stores with any other view, take the SPARK regime: one probe
+        # (traced perfbench drip run, 4 cores). Larger batches, stores
+        # with any other view, and stores whose map is projected past
+        # engine._LOCAL_MAP_BUDGET_S take the SPARK regime: one probe
         # job, one map job per (glob, map), then per store the merge
         # and re-aggregation jobs — ~40 jobs and ~6.4 s for the same
         # drip batch, but the only regime that runs a batch too large
-        # to collect. Both apply the same retract-then-add merge and
-        # delta arithmetic and commit identical state; either way the
+        # to collect. A batch over the bound also pays the thrown-away
+        # collect (~1 s more in the median at 65,536 rows, 4 cores).
+        # Both apply the same retract-then-add merge and delta
+        # arithmetic and commit identical state; either way the
         # per-batch costs are paid ONCE per batch, not once per
         # (origin, view).
         #
@@ -401,7 +404,7 @@ def watch(
         views_snapshot = list(engine.views.items())
         rows = None
         if not views_snapshot or any(
-            engine._local_store_eligible([v], None) for _n, v in views_snapshot
+            engine._local_views_eligible([v]) for _n, v in views_snapshot
         ):
             rows = _collect_bounded(batch_df)
         local_commits, spark_views = [], views_snapshot
@@ -410,16 +413,18 @@ def watch(
             per_origin: dict = {}
             for r in rows:
                 per_origin[r["origin"]] = max(r["version"], per_origin.get(r["origin"], 0))
-        spark = None
+        spark_apply = spark_release = None
         if rows is None or spark_views:
             batch_df = batch_df.persist()
             try:
-                spark = _spark_stage(batch_df, spark_views, batch_id)
+                spark_per_origin, spark_apply, spark_release = _spark_stage(
+                    batch_df, spark_views, batch_id
+                )
             except BaseException:
                 batch_df.unpersist()
                 raise
             if rows is None:
-                per_origin = spark[0]
+                per_origin = spark_per_origin
         try:
             origins = sorted(per_origin)
             for origin in origins:
@@ -463,11 +468,11 @@ def watch(
             if origins:
                 for commit in local_commits:
                     commit()
-                if spark is not None:
-                    spark[1](origins)
+                if spark_apply is not None:
+                    spark_apply(origins)
         finally:
-            if spark is not None:
-                spark[2]()
+            if spark_release is not None:
+                spark_release()
                 batch_df.unpersist()
         for name, _vdef in views_snapshot:
             for origin in origins:

@@ -253,9 +253,9 @@ def test_ineligible_views_take_spark_path(spark, tmp_path):
 
 
 def test_out_of_domain_batches_fall_back(spark, tmp_path, monkeypatch):
-    """Batches over the row bound or the content byte cap, an unsynced
-    sidecar, a flat legacy reduced snapshot and a rebucketed entries
-    shard all take the Spark path; the next in-domain batch returns to
+    """Batches over the row bound or the content byte cap, a map over
+    its time budget, an unsynced sidecar, a flat legacy reduced
+    snapshot and a rebucketed entries shard all take the Spark path; the next in-domain batch returns to
     the driver, and the state tracks a batch twin throughout."""
     from dat_archive_map_reduce_spark.operators.map_reduce import reduced_schema
     from dat_archive_map_reduce_spark.plans.catalog import VersionedTable
@@ -296,6 +296,11 @@ def test_out_of_domain_batches_fall_back(spark, tmp_path, monkeypatch):
     # driver, with the full rows from a second collect
     monkeypatch.setattr(MapReduce, "_LOCAL_INLINE_BYTES", 10)
     assert step() == {"c", "s"}
+    monkeypatch.undo()
+    # a map whose projected time is over the budget
+    monkeypatch.setattr(MapReduce, "_LOCAL_MAP_PROBE_S", 0.0)
+    monkeypatch.setattr(MapReduce, "_LOCAL_MAP_BUDGET_S", 0.0)
+    assert step() == set()
     monkeypatch.undo()
     assert step() == {"c", "s"}
     # unsynced sidecar: the sum store refolds through Spark, realigns
